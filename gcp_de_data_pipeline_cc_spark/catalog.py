@@ -20,6 +20,8 @@ Physical notes for the 100 TB design point:
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Hashable
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,9 +46,6 @@ TABLES = (
 #: dimension-sized (region=5, nation=25, supplier/part/customer grow slowly).
 DIM_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"})
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 #: runtime-settable SQL confs the engine's semantics depend on; enforced
 #: here so results are correct even on a SparkSession built elsewhere
 #: (e.g. the verification driver's own session).
@@ -69,10 +68,11 @@ def ensure_session_posture(spark: SparkSession) -> None:
 
 def table_fingerprint(sf_dir: str, name: str) -> tuple:
     """Cheap content fingerprint of one warehouse table: the sorted
-    (relative-path, mtime_ns, size) of its parquet file(s).  Session
-    caches key on this so a table REWRITTEN at the same path within one
-    Spark application (the test-suite overwrite pattern) invalidates the
-    cache instead of silently serving frames built on stale data."""
+    (relative-path, mtime_ns, size) of its parquet file(s).
+    :func:`shared` checks it so a table REWRITTEN at the same path
+    within one Spark application (the test-suite overwrite pattern)
+    triggers a rebuild instead of silently serving frames built on
+    stale data."""
     base = os.path.join(sf_dir, f"{name}.parquet")
     entries = []
     if os.path.isdir(base):
@@ -93,6 +93,43 @@ def table_fingerprint(sf_dir: str, name: str) -> tuple:
         except OSError:
             pass
     return tuple(sorted(entries))
+
+
+#: (sf_dir, key) -> (applicationId, dep fingerprints, value)
+_SHARED: dict[tuple, tuple] = {}
+
+
+def shared(
+    spark: SparkSession,
+    sf_dir: str,
+    key: Hashable,
+    deps: tuple[str, ...],
+    build: Callable[[], Any],
+) -> Any:
+    """Session-shared build: the one memoiser for relations several
+    query keys consume (graph backbones, dedup pairs, exact top-k
+    baselines, item-CF incidence, per-document quality signals).
+
+    ``key`` names the builder plus its parameters, ``deps`` the
+    warehouse tables the result reads, ``build`` is a zero-argument
+    callable that keeps its own ``localCheckpoint`` (so the value may
+    be a DataFrame, a list or a tuple).  An entry serves only the Spark
+    application that built it and only while every dependency's
+    :func:`table_fingerprint` is unchanged; otherwise it is rebuilt and
+    REPLACED, so stale checkpoints never accumulate."""
+    app = spark.sparkContext.applicationId
+    fps = tuple(table_fingerprint(sf_dir, t) for t in deps)
+    hit = _SHARED.get((sf_dir, key))
+    if hit is not None and hit[:2] == (app, fps):
+        return hit[2]
+    value = build()
+    _SHARED[(sf_dir, key)] = (app, fps, value)
+    return value
+
+
+def clear_shared() -> None:
+    """Drop every session-shared build (cold-build probes and tests)."""
+    _SHARED.clear()
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -158,18 +195,3 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
-
-class Warehouse:
-    """Convenience handle over one scale-factor directory."""
-
-    def __init__(self, spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR):
-        self.spark = spark
-        self.sf_dir = sf_dir
-
-    def table(self, name: str) -> DataFrame:
-        return load_table(self.spark, self.sf_dir, name)
-
-    def register_views(self) -> None:
-        """Register every table as a temp view for spark.sql access."""
-        for name in TABLES:
-            self.table(name).createOrReplaceTempView(name)

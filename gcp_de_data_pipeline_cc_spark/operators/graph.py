@@ -5,21 +5,24 @@ assortativity over suppliers; LPA / modularity over brands) previously
 re-derived the same collect_set + in-array pair-explode edge build inside
 every plan function: correct per key, but the expensive subtree ran once
 PER CONSUMER (≈20 s of the sf0.1 bench; at 100 TB the pair build is a
-multi-hour fact scan run seven times).  This module extracts the two
-backbones behind session-scoped caches, the same shared-relation
+multi-hour fact scan run seven times).  This module extracts the
+backbones behind session-shared builds, the same shared-relation
 injection contract the dedup tier already uses
 (plans/sketches.py dedup_accuracy_eval's jaccard_pairs injection).
 
 Cache discipline
 ----------------
-Keyed by (applicationId, sf_dir, K).  The cached value is a
-localCheckpoint(eager=False) DataFrame: the first action materializes the
-≤K·n edge blocks on the executors, every later consumer — in the SAME or
-ANY LATER query of the session — reuses the materialized blocks instead
-of re-running the lineitem scan.  Memory is bounded: the supplier
-backbone is ≤K·n_suppliers rows of two BIGINTs, the brand edge list is
-≤|brands|² rows — both dim-sized, never fact-sized.  On a real cluster
-swap localCheckpoint for checkpoint() to survive executor loss
+Every backbone goes through :func:`catalog.shared`, keyed by the
+builder's name and parameters (K, rounds, iters) and invalidated when
+the Spark application or the fingerprint of a table it reads changes.
+The cached value is a localCheckpoint(eager=False) DataFrame: the first
+action materializes the ≤K·n edge blocks on the executors, every later
+consumer — in the SAME or ANY LATER query of the session — reuses the
+materialized blocks instead of re-running the lineitem scan.  Memory is
+bounded: the supplier backbone is ≤K·n_suppliers rows of two BIGINTs,
+the brand edge list is ≤|brands|² rows, the trade graphs are
+≤2·K·|nations| rows — all dim-sized, never fact-sized.  On a real
+cluster swap localCheckpoint for checkpoint() to survive executor loss
 (graph_pagerank's documented trade-off).
 
 Reference parity: the reference repo has no graph engine; this backbone
@@ -32,26 +35,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gcp_de_data_pipeline_cc_spark.catalog import load_table
+from gcp_de_data_pipeline_cc_spark.catalog import load_table, shared
 
-# (applicationId, sf_dir, k) -> DataFrame
-_SUPPLIER_BB: dict[tuple[str, str, int], DataFrame] = {}
-_SUPPLIER_G: dict[tuple[str, str, int], DataFrame] = {}
-_BRAND_E: dict[tuple[str, str], DataFrame] = {}
-_LPA_LABELS: dict[tuple[str, str, int], list[DataFrame]] = {}
-
-
-def _cache_key(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    return (spark.sparkContext.applicationId, sf_dir)
-
-
-def clear_cache() -> None:
-    """Drop all cached backbones (tests that mutate a sf_dir in place)."""
-    _SUPPLIER_BB.clear()
-    _SUPPLIER_G.clear()
-    _BRAND_E.clear()
-    _LPA_LABELS.clear()
-    _TRADE_G.clear()
+#: the tables the nation trade graphs read
+_TRADE_DEPS = ("customer", "supplier", "orders", "lineitem")
 
 
 def _pair_col() -> F.Column:
@@ -69,6 +56,19 @@ def _pair_col() -> F.Column:
     )
 
 
+def _symmetrize(edges: DataFrame, a: str, b: str) -> DataFrame:
+    """Both orientations (u, v) of an undirected edge list (a, b),
+    exploded from one row — no union diamond."""
+    return edges.select(
+        F.explode(
+            F.array(
+                F.struct(F.col(a).alias("u"), F.col(b).alias("v")),
+                F.struct(F.col(b).alias("u"), F.col(a).alias("v")),
+            )
+        ).alias("o")
+    ).select(F.col("o.u").alias("u"), F.col("o.v").alias("v"))
+
+
 def supplier_backbone(spark: SparkSession, sf_dir: str, k: int = 8) -> DataFrame:
     """Canonical top-K co-shipment backbone: columns (sa, sb), sa < sb,
     distinct; an edge survives when EITHER endpoint ranks it in its K
@@ -80,105 +80,94 @@ def supplier_backbone(spark: SparkSession, sf_dir: str, k: int = 8) -> DataFrame
     The top-K cut keeps the backbone ≤K·n — LINEAR in nodes — where a
     weight-quantile cut would stay quadratic (graph_triangles' measured
     argument)."""
-    key = (*_cache_key(spark, sf_dir), k)
-    bb = _SUPPLIER_BB.get(key)
-    if bb is not None:
-        return bb
-    li = load_table(spark, sf_dir, "lineitem")
-    sets = (
-        li.groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_suppkey")).alias("bs"))
-        .filter(F.size("bs") >= 2)
-    )
-    e = (
-        sets.select(F.explode(_pair_col()).alias("p"))
-        .groupBy(F.col("p.sa").alias("sa"), F.col("p.sb").alias("sb"))
-        .agg(F.count("*").alias("w"))
-    )
-    # both orientations from ONE edge row — no union diamond
-    d = e.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("sa").alias("u"), F.col("sb").alias("v")),
-                F.struct(F.col("sb").alias("u"), F.col("sa").alias("v")),
+
+    def build() -> DataFrame:
+        li = load_table(spark, sf_dir, "lineitem")
+        sets = (
+            li.groupBy("l_orderkey")
+            .agg(F.array_sort(F.collect_set("l_suppkey")).alias("bs"))
+            .filter(F.size("bs") >= 2)
+        )
+        e = (
+            sets.select(F.explode(_pair_col()).alias("p"))
+            .groupBy(F.col("p.sa").alias("sa"), F.col("p.sb").alias("sb"))
+            .agg(F.count("*").alias("w"))
+        )
+        # both orientations from ONE edge row — no union diamond
+        d = e.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("sa").alias("u"), F.col("sb").alias("v")),
+                    F.struct(F.col("sb").alias("u"), F.col("sa").alias("v")),
+                )
+            ).alias("o"),
+            "w",
+        ).select(F.col("o.u").alias("u"), F.col("o.v").alias("v"), "w")
+        rn = F.row_number().over(
+            Window.partitionBy("u").orderBy(F.desc("w"), F.asc("v"))
+        )
+        return (
+            d.withColumn("rn", rn)
+            .filter(F.col("rn") <= k)
+            .select(
+                F.least("u", "v").alias("sa"), F.greatest("u", "v").alias("sb")
             )
-        ).alias("o"),
-        "w",
-    ).select(F.col("o.u").alias("u"), F.col("o.v").alias("v"), "w")
-    rn = F.row_number().over(
-        Window.partitionBy("u").orderBy(F.desc("w"), F.asc("v"))
+            .distinct()
+            .localCheckpoint(eager=False)  # ≤K·n rows, shared by the tier
+        )
+
+    return shared(
+        spark, sf_dir, ("supplier_backbone", k), ("lineitem",), build
     )
-    bb = (
-        d.withColumn("rn", rn)
-        .filter(F.col("rn") <= k)
-        .select(F.least("u", "v").alias("sa"), F.greatest("u", "v").alias("sb"))
-        .distinct()
-        .localCheckpoint(eager=False)  # ≤K·n rows, shared by the tier
-    )
-    _SUPPLIER_BB[key] = bb
-    return bb
 
 
 def supplier_graph(spark: SparkSession, sf_dir: str, k: int = 8) -> DataFrame:
     """Both orientations of the supplier backbone: columns (u, v).
     Checkpointed separately — BFS relaxations / k-core peels / wedge
     joins consume it repeatedly."""
-    key = (*_cache_key(spark, sf_dir), k)
-    g = _SUPPLIER_G.get(key)
-    if g is not None:
-        return g
-    bb = supplier_backbone(spark, sf_dir, k)
-    g = (
-        bb.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("sa").alias("u"), F.col("sb").alias("v")),
-                    F.struct(F.col("sb").alias("u"), F.col("sa").alias("v")),
-                )
-            ).alias("o")
-        )
-        .select(F.col("o.u").alias("u"), F.col("o.v").alias("v"))
-        .localCheckpoint(eager=False)
+    return shared(
+        spark,
+        sf_dir,
+        ("supplier_graph", k),
+        ("lineitem",),
+        lambda: _symmetrize(
+            supplier_backbone(spark, sf_dir, k), "sa", "sb"
+        ).localCheckpoint(eager=False),
     )
-    _SUPPLIER_G[key] = g
-    return g
 
 
 def brand_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted brand co-purchase edge list, BOTH orientations:
     columns (v, u, w) — u the label source, v the adoptee (LPA's join
     orientation).  The Σ|basket|² self-join runs once per session."""
-    key = _cache_key(spark, sf_dir)
-    e = _BRAND_E.get(key)
-    if e is not None:
-        return e
-    li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part")
-    tx = (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .select("l_orderkey", "p_brand")
-        .distinct()
-        .localCheckpoint(eager=False)  # both self-join sides
-    )
-    a, b = tx.alias("a"), tx.alias("b")
-    eup = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.p_brand") < F.col("b.p_brand")),
+
+    def build() -> DataFrame:
+        li = load_table(spark, sf_dir, "lineitem")
+        part = load_table(spark, sf_dir, "part")
+        tx = (
+            li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+            .select("l_orderkey", "p_brand")
+            .distinct()
+            .localCheckpoint(eager=False)  # both self-join sides
         )
-        .groupBy(F.col("a.p_brand").alias("v"), F.col("b.p_brand").alias("u"))
-        .agg(F.count("*").alias("w"))
-        .localCheckpoint(eager=False)  # feeds both orientations
-    )
-    e = (
-        eup.unionAll(
+        a, b = tx.alias("a"), tx.alias("b")
+        eup = (
+            a.join(
+                b,
+                (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+                & (F.col("a.p_brand") < F.col("b.p_brand")),
+            )
+            .groupBy(F.col("a.p_brand").alias("v"), F.col("b.p_brand").alias("u"))
+            .agg(F.count("*").alias("w"))
+            .localCheckpoint(eager=False)  # feeds both orientations
+        )
+        return eup.unionAll(
             eup.select(F.col("u").alias("v"), F.col("v").alias("u"), "w")
-        )
-        .localCheckpoint(eager=False)
+        ).localCheckpoint(eager=False)
+
+    return shared(
+        spark, sf_dir, "brand_copurchase_edges", ("lineitem", "part"), build
     )
-    _BRAND_E[key] = e
-    return e
 
 
 def lpa_step(e: DataFrame, labels: DataFrame) -> DataFrame:
@@ -204,91 +193,46 @@ def lpa_labels(
     """Checkpointed label tables after rounds 1..iters over the brand
     graph (round 0 = every node its own community).  LPA reports rounds
     1 and 2; modularity scores round 2 — one shared propagation."""
-    key = (*_cache_key(spark, sf_dir), iters)
-    ls = _LPA_LABELS.get(key)
-    if ls is not None:
+
+    def build() -> list[DataFrame]:
+        e = brand_copurchase_edges(spark, sf_dir)
+        labels = e.select("v").distinct().withColumn("label", F.col("v"))
+        ls = []
+        for _ in range(iters):
+            labels = lpa_step(e, labels).localCheckpoint(eager=False)
+            ls.append(labels)
         return ls
-    e = brand_copurchase_edges(spark, sf_dir)
-    labels = e.select("v").distinct().withColumn("label", F.col("v"))
-    ls = []
-    for _ in range(iters):
-        labels = lpa_step(e, labels).localCheckpoint(eager=False)
-        ls.append(labels)
-    _LPA_LABELS[key] = ls
-    return ls
 
-
-# (applicationId, sf_dir, k) -> symmetrized sparsified trade graph
-_TRADE_G: dict[tuple[str, str, int], DataFrame] = {}
+    return shared(
+        spark, sf_dir, ("lpa_labels", iters), ("lineitem", "part"), build
+    )
 
 
 def trade_sparse_graph(
     spark: SparkSession, sf_dir: str, k: int = 3
 ) -> DataFrame:
-    """Sparsified undirected nation trade graph, columns (u, v): keep
-    each nation's ``k`` strongest trade partners (weight = lineitems
-    shipped customer-nation -> supplier-nation, self-flows dropped,
-    rank ties on partner key), symmetrize.  The raw flow matrix is
-    near-complete — distance-1 everywhere — so the centrality keys
-    (closeness, betweenness) are only informative on this backbone.
-    One tpch_q7-shaped fact pass per session; the result is a
-    checkpointed <= 2·k·|nations|-row relation shared by every
-    consumer (the supplier_backbone ownership contract)."""
-    key = (*_cache_key(spark, sf_dir), k)
-    g = _TRADE_G.get(key)
-    if g is not None:
-        return g
-    customer = load_table(spark, sf_dir, "customer")
-    supplier = load_table(spark, sf_dir, "supplier")
-    orders = load_table(spark, sf_dir, "orders")
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    e = (
-        lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
-        .join(
-            F.broadcast(customer.select("c_custkey", "c_nationkey")),
-            orders.o_custkey == F.col("c_custkey"),
-        )
-        .join(
-            F.broadcast(supplier.select("s_suppkey", "s_nationkey")),
-            lineitem.l_suppkey == F.col("s_suppkey"),
-        )
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(
-            F.col("c_nationkey").alias("src"),
-            F.col("s_nationkey").alias("dst"),
-        )
-        .agg(F.count("*").cast("long").alias("w"))
-    )
-    rn = F.row_number().over(
-        Window.partitionBy("src").orderBy(F.desc("w"), F.asc("dst"))
-    )
-    kept = (
-        e.withColumn("rn", rn)
-        .filter(F.col("rn") <= k)
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .distinct()
-    )
-    g = (
-        kept.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("a").alias("u"), F.col("b").alias("v")),
-                    F.struct(F.col("b").alias("u"), F.col("a").alias("v")),
-                )
-            ).alias("o")
-        )
-        .select(F.col("o.u").alias("u"), F.col("o.v").alias("v"))
-        .localCheckpoint(eager=False)
-    )
-    _TRADE_G[key] = g
-    return g
+    """Sparsified undirected nation trade graph, columns (u, v): the
+    :func:`trade_sparse_digraph` edges with direction dropped (each
+    nation's ``k`` strongest partners, symmetrized).  The raw flow
+    matrix is near-complete — distance-1 everywhere — so the centrality
+    keys (closeness, betweenness) are only informative on this
+    backbone.  Derived from the checkpointed digraph, so the
+    tpch_q7-shaped fact pass runs once per session for both; the
+    result is a checkpointed <= 2·k·|nations|-row relation shared by
+    every consumer (the supplier_backbone ownership contract)."""
 
+    def build() -> DataFrame:
+        kept = (
+            trade_sparse_digraph(spark, sf_dir, k)
+            .select(
+                F.least("src", "dst").alias("a"),
+                F.greatest("src", "dst").alias("b"),
+            )
+            .distinct()
+        )
+        return _symmetrize(kept, "a", "b").localCheckpoint(eager=False)
 
-# (applicationId, sf_dir, k) -> DIRECTED sparsified trade digraph
-_TRADE_DG: dict[tuple[str, str, int], DataFrame] = {}
+    return shared(spark, sf_dir, ("trade_sparse_graph", k), _TRADE_DEPS, build)
 
 
 def trade_sparse_digraph(
@@ -300,48 +244,43 @@ def trade_sparse_digraph(
     self-flows dropped, rank ties on partner key), WITHOUT the
     symmetrization :func:`trade_sparse_graph` applies — direction is
     the point for SCC/condensation analyses (u sells to v is not v
-    sells to u).  Same one-fact-pass, checkpointed, session-cached
-    ownership contract."""
-    key = (*_cache_key(spark, sf_dir), k)
-    g = _TRADE_DG.get(key)
-    if g is not None:
-        return g
-    customer = load_table(spark, sf_dir, "customer")
-    supplier = load_table(spark, sf_dir, "supplier")
-    orders = load_table(spark, sf_dir, "orders")
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    e = (
-        lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
-        .join(
-            F.broadcast(customer.select("c_custkey", "c_nationkey")),
-            orders.o_custkey == F.col("c_custkey"),
-        )
-        .join(
-            F.broadcast(supplier.select("s_suppkey", "s_nationkey")),
-            lineitem.l_suppkey == F.col("s_suppkey"),
-        )
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(
-            F.col("c_nationkey").alias("src"),
-            F.col("s_nationkey").alias("dst"),
-        )
-        .agg(F.count("*").cast("long").alias("w"))
-    )
-    rn = F.row_number().over(
-        Window.partitionBy("src").orderBy(F.desc("w"), F.asc("dst"))
-    )
-    g = (
-        e.withColumn("rn", rn)
-        .filter(F.col("rn") <= k)
-        .select("src", "dst")
-        .localCheckpoint(eager=False)
-    )
-    _TRADE_DG[key] = g
-    return g
+    sells to u).  One fact pass, checkpointed, session-shared."""
 
+    def build() -> DataFrame:
+        customer = load_table(spark, sf_dir, "customer")
+        supplier = load_table(spark, sf_dir, "supplier")
+        orders = load_table(spark, sf_dir, "orders")
+        lineitem = load_table(spark, sf_dir, "lineitem")
+        e = (
+            lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
+            .join(
+                F.broadcast(customer.select("c_custkey", "c_nationkey")),
+                orders.o_custkey == F.col("c_custkey"),
+            )
+            .join(
+                F.broadcast(supplier.select("s_suppkey", "s_nationkey")),
+                lineitem.l_suppkey == F.col("s_suppkey"),
+            )
+            .filter(F.col("c_nationkey") != F.col("s_nationkey"))
+            .groupBy(
+                F.col("c_nationkey").alias("src"),
+                F.col("s_nationkey").alias("dst"),
+            )
+            .agg(F.count("*").cast("long").alias("w"))
+        )
+        rn = F.row_number().over(
+            Window.partitionBy("src").orderBy(F.desc("w"), F.asc("dst"))
+        )
+        return (
+            e.withColumn("rn", rn)
+            .filter(F.col("rn") <= k)
+            .select("src", "dst")
+            .localCheckpoint(eager=False)
+        )
 
-# (applicationId, sf_dir, k, rounds) -> (u, scc_id) labels
-_SCC_LBL: dict[tuple[str, str, int, int], DataFrame] = {}
+    return shared(
+        spark, sf_dir, ("trade_sparse_digraph", k), _TRADE_DEPS, build
+    )
 
 
 def scc_labels(
@@ -350,48 +289,52 @@ def scc_labels(
     """Strongly-connected-component labels (u, scc_id) over
     :func:`trade_sparse_digraph`: transitive closure by ``rounds``
     squaring steps over R0 = I ∪ E (paths ≤ 2^rounds cover the nation
-    domain), scc_id = min mutually-reachable node.  Session-cached and
+    domain), scc_id = min mutually-reachable node.  Session-shared and
     checkpointed — graph_scc and graph_condensation share ONE closure
     build (the supplier_backbone ownership contract)."""
-    key = (*_cache_key(spark, sf_dir), k, rounds)
-    lbl = _SCC_LBL.get(key)
-    if lbl is not None:
-        return lbl
-    nation = load_table(spark, sf_dir, "nation")
-    g = trade_sparse_digraph(spark, sf_dir, k)
-    reach = (
-        nation.select(
-            F.col("n_nationkey").alias("u"),
-            F.col("n_nationkey").alias("v"),
-        )
-        .unionByName(
-            g.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    for _ in range(rounds):
-        hop = (
-            reach.alias("a")
-            .join(reach.alias("b"), F.col("a.v") == F.col("b.u"))
-            .select(F.col("a.u").alias("u"), F.col("b.v").alias("v"))
-        )
+
+    def build() -> DataFrame:
+        nation = load_table(spark, sf_dir, "nation")
+        g = trade_sparse_digraph(spark, sf_dir, k)
         reach = (
-            reach.unionByName(hop).distinct().localCheckpoint(eager=False)
+            nation.select(
+                F.col("n_nationkey").alias("u"),
+                F.col("n_nationkey").alias("v"),
+            )
+            .unionByName(
+                g.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+            )
+            .distinct()
+            .localCheckpoint(eager=False)
         )
-    pair = (
-        reach.alias("r1")
-        .join(
-            reach.alias("r2"),
-            (F.col("r1.u") == F.col("r2.v"))
-            & (F.col("r1.v") == F.col("r2.u")),
+        for _ in range(rounds):
+            hop = (
+                reach.alias("a")
+                .join(reach.alias("b"), F.col("a.v") == F.col("b.u"))
+                .select(F.col("a.u").alias("u"), F.col("b.v").alias("v"))
+            )
+            reach = (
+                reach.unionByName(hop).distinct().localCheckpoint(eager=False)
+            )
+        pair = (
+            reach.alias("r1")
+            .join(
+                reach.alias("r2"),
+                (F.col("r1.u") == F.col("r2.v"))
+                & (F.col("r1.v") == F.col("r2.u")),
+            )
+            .select(F.col("r1.u").alias("u"), F.col("r1.v").alias("v"))
         )
-        .select(F.col("r1.u").alias("u"), F.col("r1.v").alias("v"))
+        return (
+            pair.groupBy("u")
+            .agg(F.min("v").cast("long").alias("scc_id"))
+            .localCheckpoint(eager=False)
+        )
+
+    return shared(
+        spark,
+        sf_dir,
+        ("scc_labels", k, rounds),
+        (*_TRADE_DEPS, "nation"),
+        build,
     )
-    lbl = (
-        pair.groupBy("u")
-        .agg(F.min("v").cast("long").alias("scc_id"))
-        .localCheckpoint(eager=False)
-    )
-    _SCC_LBL[key] = lbl
-    return lbl

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gcp_de_data_pipeline_cc_spark.catalog import load_table
+from gcp_de_data_pipeline_cc_spark.catalog import load_table, shared
 from gcp_de_data_pipeline_cc_spark.functions.rounding import roundn, sql_roundn
 from gcp_de_data_pipeline_cc_spark.operators import text as tx
 from gcp_de_data_pipeline_cc_spark.plans.registry import query
@@ -71,10 +71,6 @@ def text_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     after a frequency floor it broadcasts), and the corpus totals are a
     one-row broadcast. No second corpus scan: the model and the scoring
     pass share the exploded-token relation."""
-    from gcp_de_data_pipeline_cc_spark.plans.corpus_stats import (
-        _signal_cached,
-    )
-
     def build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents")
         tok = docs.select(
@@ -96,11 +92,12 @@ def text_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
                 roundn(bits, 4).alias("bits_per_token"),
                 roundn(F.pow(F.lit(2.0), bits), 4).alias("perplexity"),
             )
+            .localCheckpoint(eager=False)
         )
 
     # r10: session-shared with quality_composite_score (which consumes
-    # this relation verbatim) — the corpus_stats._signal_cached pattern
-    return _signal_cached(spark, sf_dir, "perplexity", build)
+    # this relation verbatim)
+    return shared(spark, sf_dir, "text_perplexity", ("documents",), build)
 
 
 #: tokens per dedup block — the "line" analog for punctuation-free feeds

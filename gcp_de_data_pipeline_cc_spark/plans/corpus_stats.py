@@ -17,31 +17,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gcp_de_data_pipeline_cc_spark.catalog import load_table
+from gcp_de_data_pipeline_cc_spark.catalog import load_table, shared
 from gcp_de_data_pipeline_cc_spark.functions.rounding import roundn, sql_roundn
 from gcp_de_data_pipeline_cc_spark.plans.registry import query
 
-# ---------------------------------------------------------------------------
-# r10 session-shared quality signals (the recsys/_cf ownership pattern):
-# text_entropy and text_repetition are consumed verbatim by
-# quality_composite_score (and their own registry keys), so each signal
-# relation is built once per (session, warehouse fingerprint) and
-# lazily checkpointed — materialized inside the first consumer's timed
-# region, never persisted across runs.
-# ---------------------------------------------------------------------------
-
-_SIGNAL_CACHE: dict[tuple, DataFrame] = {}
-
-
-def _signal_cached(spark, sf_dir: str, name: str, build) -> DataFrame:
-    from gcp_de_data_pipeline_cc_spark.plans.llm import _session_cache_key
-
-    key = (*_session_cache_key(spark, sf_dir, "documents"), name)
-    df = _SIGNAL_CACHE.get(key)
-    if df is None:
-        df = build().localCheckpoint(eager=False)
-        _SIGNAL_CACHE[key] = df
-    return df
+# Memory bound of the session-shared quality signals (text_entropy and
+# text_repetition, consumed verbatim by quality_composite_score): each
+# is ≤ one row per document.
 
 
 @query(
@@ -94,9 +76,10 @@ def text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             freq.join(tot, "doc_id")
             .groupBy("doc_id", "n_distinct_chars")
             .agg(roundn(-F.sum(p * F.log2(p)), 6).alias("entropy"))
+            .localCheckpoint(eager=False)
         )
 
-    return _signal_cached(spark, sf_dir, "entropy", build)
+    return shared(spark, sf_dir, "text_entropy", ("documents",), build)
 
 
 @query(
@@ -210,9 +193,9 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("n").alias("top_count"),
             roundn(F.max("n") / F.sum("n"), 4).alias("repetition_ratio"),
             roundn(F.count("*") / F.sum("n"), 4).alias("distinct_ratio"),
-        )
+        ).localCheckpoint(eager=False)
 
-    return _signal_cached(spark, sf_dir, "repetition", build)
+    return shared(spark, sf_dir, "text_repetition", ("documents",), build)
 
 
 @query(

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gcp_de_data_pipeline_cc_spark.catalog import load_table, table_fingerprint
+from gcp_de_data_pipeline_cc_spark.catalog import load_table, shared
 from gcp_de_data_pipeline_cc_spark.functions.rounding import roundn, sql_roundn
 from gcp_de_data_pipeline_cc_spark.plans.registry import REGISTRY, query
 
@@ -37,30 +37,19 @@ from gcp_de_data_pipeline_cc_spark.plans.registry import REGISTRY, query
 # session-shared item-CF build (r9 optimization): recsys_item_knn,
 # recsys_coverage (which nests the knn plan) and recsys_diversity_ild
 # all derive from the SAME customer-brand incidence and brand
-# co-occurrence relations — build each once per (session, warehouse)
-# like the graph-backbone ownership contract.  recsys_hit_rate
-# retrains on the leakage-safe TRAIN split and cannot share.
+# co-occurrence relations — both ≤ customers×brands / brands² rows.
+# recsys_hit_rate retrains on the leakage-safe TRAIN split and cannot
+# share.
 # ---------------------------------------------------------------------------
 
-_CF_V: dict[tuple, DataFrame] = {}
-_CF_CO: dict[tuple, DataFrame] = {}
-
-
-def _cf_key(spark: SparkSession, sf_dir: str) -> tuple:
-    return (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        table_fingerprint(sf_dir, "lineitem"),
-        table_fingerprint(sf_dir, "orders"),
-        table_fingerprint(sf_dir, "part"),
-    )
+#: the tables the item-CF relations read
+_CF_DEPS = ("lineitem", "orders", "part")
 
 
 def _cf_incidence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (c, brand) customer-brand incidence, checkpointed."""
-    key = _cf_key(spark, sf_dir)
-    v = _CF_V.get(key)
-    if v is None:
+
+    def build() -> DataFrame:
         li = load_table(spark, sf_dir, "lineitem")
         orders = load_table(spark, sf_dir, "orders")
         part = load_table(spark, sf_dir, "part")
@@ -75,24 +64,23 @@ def _cf_incidence(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .distinct()
         )
-        v = (
+        return (
             ob.join(orders, ob.k0 == orders.o_orderkey)
             .select(F.col("o_custkey").alias("c"), "brand")
             .distinct()
             .localCheckpoint(eager=False)
         )
-        _CF_V[key] = v
-    return v
+
+    return shared(spark, sf_dir, "cf_incidence", _CF_DEPS, build)
 
 
 def _cf_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(brand_a < brand_b, co_n) co-purchase counts, checkpointed."""
-    key = _cf_key(spark, sf_dir)
-    co = _CF_CO.get(key)
-    if co is None:
+
+    def build() -> DataFrame:
         v = _cf_incidence(spark, sf_dir)
         a, b = v.alias("a"), v.alias("b")
-        co = (
+        return (
             a.join(
                 b,
                 (F.col("a.c") == F.col("b.c"))
@@ -105,8 +93,9 @@ def _cf_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").alias("co_n"))
             .localCheckpoint(eager=False)
         )
-        _CF_CO[key] = co
-    return co
+
+    return shared(spark, sf_dir, "cf_cooccurrence", _CF_DEPS, build)
+
 
 #: neighbors reported per item
 _TOP_N = 5

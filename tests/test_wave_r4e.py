@@ -51,10 +51,13 @@ def test_udf_cogrouped_stable_across_runs(spark):
 
 # -------------------------------------------------- shared graph backbone
 
-def test_graph_backbone_cached_per_session(spark):
+def test_graph_backbone_cached_per_session(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    from gcp_de_data_pipeline_cc_spark.catalog import clear_shared
     from gcp_de_data_pipeline_cc_spark.operators import graph as og
 
-    og.clear_cache()
+    clear_shared()
     bb1 = og.supplier_backbone(spark, SF_DIR, 8)
     bb2 = og.supplier_backbone(spark, SF_DIR, 8)
     assert bb1 is bb2  # same checkpointed relation, not a rebuild
@@ -67,14 +70,39 @@ def test_graph_backbone_cached_per_session(spark):
     l1, l2 = og.lpa_labels(spark, SF_DIR, 2)
     assert og.lpa_labels(spark, SF_DIR, 2)[0] is l1
 
+    # lineitem rewritten at the same path: the next call rebuilds
+    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
+    li.write.parquet(f"{tmp_path}/lineitem.parquet")
+    stale = og.supplier_backbone(spark, str(tmp_path), 8)
+    stale_rows = set(stale.collect())
+    li.filter(F.col("l_orderkey") % 2 == 0).write.mode("overwrite").parquet(
+        f"{tmp_path}/lineitem.parquet"
+    )
+    rebuilt = og.supplier_backbone(spark, str(tmp_path), 8)
+    assert rebuilt is not stale
+    rebuilt_rows = set(rebuilt.collect())
+    assert rebuilt_rows != stale_rows  # the subset changes the backbone
+    clear_shared()
+    assert rebuilt_rows == set(
+        og.supplier_backbone(spark, str(tmp_path), 8).collect()
+    )
+
+    # clear_shared drops every shared build, the trade graphs included
+    scc = og.scc_labels(spark, SF_DIR)
+    dg = og.trade_sparse_digraph(spark, SF_DIR)
+    assert og.scc_labels(spark, SF_DIR) is scc
+    clear_shared()
+    assert og.scc_labels(spark, SF_DIR) is not scc
+    assert og.trade_sparse_digraph(spark, SF_DIR) is not dg
+
 
 def test_graph_keys_share_one_backbone_subtree(spark):
     # after clearing, running triangles then assortativity must NOT
     # re-derive the pair-explode subtree: the second key's analyzed plan
     # contains the checkpointed scan, not a lineitem aggregate
-    from gcp_de_data_pipeline_cc_spark.operators import graph as og
+    from gcp_de_data_pipeline_cc_spark.catalog import clear_shared
 
-    og.clear_cache()
+    clear_shared()
     t = REGISTRY["graph_triangles"].spark(spark, SF_DIR)
     t.collect()
     a = REGISTRY["graph_assortativity"].spark(spark, SF_DIR)
